@@ -69,8 +69,44 @@ def dedupe_latest(
     ).select(*df.columns)
 
 
+def key_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: Sequence[str],
+    how: str,
+    null_safe: Sequence[str] = (),
+) -> DataFrame:
+    """``left.join(right, keys, how)`` with the ``null_safe`` key
+    columns matched by ``<=>`` instead of ``=`` (a null there matches a
+    null). Output columns are those of the USING join: each key column
+    once, from ``left``, then ``left``'s and ``right``'s other columns.
+    Without ``null_safe`` this IS the USING join."""
+    if not null_safe:
+        return left.join(right, on=list(keys), how=how)
+    # rename right's key columns: a join condition over same-named
+    # columns of two frames of one lineage would resolve ambiguously
+    renamed = {c: f"__r_{c}" for c in keys}
+    r = right.withColumnsRenamed(renamed)
+    cond = None
+    for c in keys:
+        term = (
+            F.col(c).eqNullSafe(F.col(renamed[c]))
+            if c in null_safe
+            else F.col(c) == F.col(renamed[c])
+        )
+        cond = term if cond is None else cond & term
+    out = left.join(r, cond, how)
+    if how in ("left_anti", "left_semi"):  # output is left's columns only
+        return out
+    return out.drop(*renamed.values())
+
+
 def merge_upsert(
-    target: DataFrame, source: DataFrame, keys: Sequence[str], evolve_schema: bool = False
+    target: DataFrame,
+    source: DataFrame,
+    keys: Sequence[str],
+    evolve_schema: bool = False,
+    null_safe: Sequence[str] = (),
 ) -> DataFrame:
     """Upsert: rows of ``target`` whose key is absent from ``source``,
     plus all of ``source`` (J4 / K1).
@@ -88,8 +124,10 @@ def merge_upsert(
     added to the table (null for untouched rows), columns missing from
     ``source`` are kept (null for upserted rows) — the ``mergeSchema``
     behavior of Delta/parquet.
+
+    ``null_safe``: key columns matched by ``<=>`` (see ``key_join``).
     """
-    kept = target.join(source.select(*keys).distinct(), on=list(keys), how="left_anti")
+    kept = key_join(target, source.select(*keys).distinct(), keys, "left_anti", null_safe)
     # a USING-column join moves the join keys to the front; restore the
     # TARGET's column order so repeated merges are column-order-stable
     # (a keyed table's schema must not depend on which commit path last
@@ -132,12 +170,18 @@ def split_create_update(
     return to_create, to_update
 
 
-def delete_matching(target: DataFrame, keys_to_delete: DataFrame, keys: Sequence[str]) -> DataFrame:
+def delete_matching(
+    target: DataFrame,
+    keys_to_delete: DataFrame,
+    keys: Sequence[str],
+    null_safe: Sequence[str] = (),
+) -> DataFrame:
     """Mass delete by key set (K2) as an anti-join. Column order is
     restored after the USING join (which fronts the keys) so rewritten
-    files keep the table's schema order."""
-    return target.join(
-        keys_to_delete.select(*keys).distinct(), on=list(keys), how="left_anti"
+    files keep the table's schema order. ``null_safe``: key columns
+    matched by ``<=>`` (see ``key_join``)."""
+    return key_join(
+        target, keys_to_delete.select(*keys).distinct(), keys, "left_anti", null_safe
     ).select(*target.columns)
 
 

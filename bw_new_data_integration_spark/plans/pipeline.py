@@ -26,6 +26,7 @@ is codegen'd.
 
 from __future__ import annotations
 
+import datetime
 import re
 from dataclasses import dataclass, field
 
@@ -407,8 +408,14 @@ def finish_plan(
         projected = projected.filter(cond)
 
     if audit_ts:
-        # P6: crf63_lastrefreshed audit column
-        projected = projected.withColumn("last_refreshed", F.current_timestamp())
+        # P6: crf63_lastrefreshed audit column. One driver-side instant
+        # taken when the plan is built, as a timestamp literal: Spark
+        # fixes current_timestamp() per query EXECUTION, so a plan run
+        # twice (a change_feed commit writes the snapshot, then stages
+        # its change events) would stamp the table and its change feed
+        # with different values
+        now = datetime.datetime.now(datetime.timezone.utc)
+        projected = projected.withColumn("last_refreshed", F.lit(now))
     return projected
 
 

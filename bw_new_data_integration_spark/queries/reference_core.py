@@ -823,7 +823,11 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # applyInPandasWithState sessionizer above. One shuffle on user_id,
 # session merge inside the aggregate; the oracle derives identical
 # sessions via the lag/island construction. window.end is defined as
-# last_event + gap by the built-in; the oracle mirrors that.
+# last_event + gap by the built-in; the oracle mirrors that. The gap
+# test compares the exact interval: the built-in merges an event into
+# the session while ts <= last_event + gap (a gap of exactly 30 minutes
+# continues it), at microsecond precision — a whole-second date_diff
+# would merge a 1800.5 s gap the built-in splits.
 # ---------------------------------------------------------------------------
 @register(
     "o8_session_window_native",
@@ -831,7 +835,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH g AS (
   SELECT user_id, ts::TIMESTAMP AS ts, value,
          CASE WHEN lag(ts::TIMESTAMP) OVER w IS NULL
-                   OR date_diff('second', lag(ts::TIMESTAMP) OVER w, ts::TIMESTAMP) > 1800
+                   OR ts::TIMESTAMP > lag(ts::TIMESTAMP) OVER w + INTERVAL 30 MINUTE
               THEN 1 ELSE 0 END AS is_new
   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts::TIMESTAMP, event_id)
 ),

@@ -1141,7 +1141,7 @@ def k16_change_driven_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def capture(path):
         def factory():
-            def transport(batch):
+            def transport(batch, method="PATCH"):
                 with open(path, "a") as f:
                     for rec in batch:
                         f.write(_json.dumps(rec, default=str) + "\n")

@@ -23,12 +23,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
+    """Build a SparkSession with engine defaults, or return the running
+    one untouched.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     when no cluster master is configured; on a real cluster, pass the
     cluster master or rely on spark-submit.
+
+    A session that is already running keeps its conf: ``getOrCreate``
+    on it would re-apply this builder's runtime SQL conf (shuffle
+    partitions, AQE, ...) over whatever its owner chose — a pipeline
+    run inside a test or notebook session silently re-tuned it.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"

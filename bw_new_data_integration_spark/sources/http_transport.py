@@ -2,7 +2,8 @@
 
 Everything network-facing in this engine is a callable seam —
 ``xmla.fetch_partitioned*`` takes ``execute(mdx) -> xml``,
-``odata.write_batched`` takes ``transport(batch) -> statuses``,
+``odata.write_batched`` takes ``transport(batch) -> statuses`` (and
+``odata.delete_batched`` calls it as ``transport(batch, method="DELETE")``),
 ``notifications.notify`` takes ``sender(subject, body)``. This module
 supplies the production implementations of those callables over plain
 HTTP(S), matching the reference's wire behavior:
@@ -13,7 +14,8 @@ HTTP(S), matching the reference's wire behavior:
   path completion; non-200 raises with a body preview.
 - **OData ``$batch`` multipart** (reference ``modules/dataverse.py:
   60-226``): one changeset of per-record ``PATCH
-  table(key='escaped')`` parts with Content-IDs, ``Prefer:
+  table(key='escaped')`` parts (``DELETE``, bodiless, for mass
+  deletes) with Content-IDs, ``Prefer:
   odata.continue-on-error``, per-subresponse status extraction with a
   conservative fallback, wire-level 429/Retry-After handling, and
   401/403 surfaced per-row so the sink's token-refresh-and-resend
@@ -268,13 +270,19 @@ def encode_odata_batch(
     alternate_key: str,
     batch_id: str | None = None,
     changeset_id: str | None = None,
+    method: str = "PATCH",
 ) -> tuple[bytes, str]:
-    """Multipart ``$batch`` body: one changeset of per-record PATCH
-    parts addressed by alternate key with single quotes doubled,
-    Content-IDs 1..n (OData v4.01 batch format; the reference builds
-    the same bytes in ``modules/dataverse.py:69-108``). Returns
-    ``(body, content_type)``; boundary ids are injectable so tests can
-    pin golden bytes."""
+    """Multipart ``$batch`` body: one changeset of per-record parts
+    addressed by alternate key with single quotes doubled, Content-IDs
+    1..n (OData v4.01 batch format; the reference builds the same bytes
+    in ``modules/dataverse.py:69-108``). ``method="PATCH"`` upserts
+    each record (JSON body, nulls pruned); ``method="DELETE"`` removes
+    the record by key (no body — the reference's mass delete,
+    ``full_refresh_fy2023_2025.py:59-167``). Returns ``(body,
+    content_type)``; boundary ids are injectable so tests can pin
+    golden bytes."""
+    if method not in ("PATCH", "DELETE"):
+        raise ValueError(f"encode_odata_batch: method must be PATCH or DELETE, got {method!r}")
     batch_id = batch_id or f"batch_{uuid.uuid4()}"
     changeset_id = changeset_id or f"changeset_{uuid.uuid4()}"
     parts = [
@@ -283,7 +291,17 @@ def encode_odata_batch(
     for i, rec in enumerate(records, 1):
         clean = {k: v for k, v in rec.items() if v is not None}  # P7 null pruning
         key = format_key_for_url(str(clean[alternate_key]))
-        payload = json.dumps(clean, separators=(",", ":"), default=str)
+        if method == "DELETE":
+            request = f"DELETE {table}({alternate_key}='{key}') HTTP/1.1\r\n\r\n"
+        else:
+            payload = json.dumps(clean, separators=(",", ":"), default=str)
+            request = (
+                f"PATCH {table}({alternate_key}='{key}') HTTP/1.1\r\n"
+                "Content-Type: application/json\r\n"
+                "Prefer: return=representation\r\n"
+                "\r\n"
+                f"{payload}\r\n"
+            )
         parts.append(
             (
                 f"--{changeset_id}\r\n"
@@ -291,11 +309,7 @@ def encode_odata_batch(
                 "Content-Transfer-Encoding: binary\r\n"
                 f"Content-ID: {i}\r\n"
                 "\r\n"
-                f"PATCH {table}({alternate_key}='{key}') HTTP/1.1\r\n"
-                "Content-Type: application/json\r\n"
-                "Prefer: return=representation\r\n"
-                "\r\n"
-                f"{payload}\r\n"
+                f"{request}"
             ).encode()
         )
     parts.append(f"--{changeset_id}--\r\n--{batch_id}--\r\n".encode())
@@ -317,8 +331,9 @@ def parse_batch_statuses(batch_text: str, expected: int) -> list[int]:
 
 
 class ODataBatchTransport:
-    """``transport(batch) -> per-row statuses`` over a real ``$batch``
-    endpoint — plugs straight into ``odata.write_batched``.
+    """``transport(batch, method="PATCH") -> per-row statuses`` over a
+    real ``$batch`` endpoint — plugs straight into
+    ``odata.write_batched`` and ``odata.delete_batched``.
 
     Division of labor with ``odata._send_batch`` (which wraps every
     transport): THIS layer owns the wire — multipart encoding, bearer
@@ -351,8 +366,10 @@ class ODataBatchTransport:
     def on_auth_error(self) -> None:  # hook probed by odata._send_batch
         self.tokens.invalidate()
 
-    def __call__(self, batch: list[dict]) -> list[int]:
-        body, content_type = encode_odata_batch(self.table, batch, self.alternate_key)
+    def __call__(self, batch: list[dict], method: str = "PATCH") -> list[int]:
+        body, content_type = encode_odata_batch(
+            self.table, batch, self.alternate_key, method=method
+        )
         for attempt in range(self.policy.max_attempts):
             headers = {
                 "Authorization": f"Bearer {self.tokens.token()}",

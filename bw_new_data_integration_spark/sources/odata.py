@@ -10,8 +10,10 @@ Spark-first shape: the DataFrame is repartitioned to the desired
 concurrency and each partition streams its rows into batches inside
 ``foreachPartition`` — executors ARE the thread pool, so the 6-thread
 ThreadPoolExecutor disappears. The HTTP transport is injected
-(``transport(batch_rows) -> per-row status codes``): tests use a fake;
-production wires a requests session. Counters come back through Spark
+(``transport(batch_rows) -> per-row status codes``; deletes call
+``transport(batch_rows, method="DELETE")``, so a transport that cannot
+delete fails loudly instead of upserting key-only records): tests use a
+fake; production wires a requests session. Counters come back through Spark
 accumulators, matching the reference's created/updated/errors summary.
 """
 
@@ -25,7 +27,9 @@ from pyspark.sql import DataFrame
 
 logger = logging.getLogger(__name__)
 
-Transport = Callable[[list[dict]], list[int]]
+#: ``transport(batch) -> per-row statuses`` upserts the records (PATCH);
+#: ``transport(batch, method="DELETE")`` deletes them by key
+Transport = Callable[..., list[int]]
 
 #: statuses the reference counts as success (modules/dataverse.py:110-146)
 SUCCESS_CREATED = 201
@@ -138,6 +142,7 @@ def write_batched(
     batch_size: int = 400,
     concurrency: int = 6,
     policy: RetryPolicy | None = None,
+    method: str = "PATCH",
 ) -> dict[str, int]:
     """Upload a DataFrame through a batched keyed REST API.
 
@@ -154,7 +159,12 @@ def write_batched(
     401/403 triggers it and is resent immediately — the reference's
     refresh-on-unauthorized discipline; proactive age-based refresh
     lives inside the transport via ``TokenProvider.token()``.
+
+    ``method="DELETE"`` (``delete_batched``) sends every batch as
+    ``transport(batch, method="DELETE")``.
     """
+    if method not in ("PATCH", "DELETE"):
+        raise ValueError(f"write_batched: method must be PATCH or DELETE, got {method!r}")
     policy = policy or RetryPolicy()
     spark = df.sparkSession
     acc_created = spark.sparkContext.accumulator(0)
@@ -165,6 +175,8 @@ def write_batched(
     def handle_partition(rows: Iterator) -> None:
         transport = transport_factory()
         on_auth_error = getattr(transport, "on_auth_error", None)
+        if method == "DELETE":
+            transport = _deleting(transport)
         stats = BatchStats()
         batch: list[dict] = []
         t0 = time.time()
@@ -194,6 +206,18 @@ def write_batched(
     }
 
 
+def _deleting(transport: Transport) -> Callable[[list[dict]], list[int]]:
+    """``transport`` sending DELETE parts. A 404 (the key is already
+    gone) counts as done: a replayed span re-sends its deletes, and an
+    idempotent delete must not turn them into errors that hold the sync
+    watermark back forever."""
+
+    def send(batch: list[dict]) -> list[int]:
+        return [204 if s == 404 else s for s in transport(batch, method="DELETE")]
+
+    return send
+
+
 def delete_batched(
     keys_df: DataFrame,
     transport_factory: Callable[[], Transport],
@@ -204,7 +228,10 @@ def delete_batched(
 ) -> dict[str, int]:
     """Mass delete by key (K2): the reference pages IDs then deletes in
     parallel batches (``full_refresh_fy2023_2025.py:59-167``); here the
-    key set is already a DataFrame and partitions bound concurrency."""
+    key set is already a DataFrame and partitions bound concurrency.
+    Each batch goes out as ``transport(batch, method="DELETE")``: a
+    transport without a ``method`` parameter raises rather than
+    sending the keys as upserts."""
     return write_batched(
         keys_df.select(key_col),
         transport_factory,
@@ -212,6 +239,7 @@ def delete_batched(
         batch_size=batch_size,
         concurrency=concurrency,
         policy=policy,
+        method="DELETE",
     )
 
 

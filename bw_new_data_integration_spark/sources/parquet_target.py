@@ -7,17 +7,23 @@ Delta/Iceberg jars. Semantics provided:
 - **upsert** (K1/J4): deterministic MERGE — source deduped per key,
   matched target rows replaced, new keys appended,
 - **delete** (K2): anti-join by key set,
+- **apply_changes**: a delete and an upsert as one commit,
 - **overwrite** (full refresh),
 - snapshot isolation: each commit writes a new ``v=N`` directory and
   flips a ``_LATEST`` pointer afterwards — readers of the previous
   snapshot are never disturbed, and a crashed writer leaves the
   pointer (and thus the table) unchanged.
 
+upsert, delete_keys and apply_changes are one keyed commit,
+``ParquetKeyedTable._apply``, in two orthogonal steps: a scope step
+(``_scope``: all files, the touched hive partitions, or the files whose
+key range holds a touched key — the rest are hard-linked forward) and a
+layout step (copy-on-write rewrites the scoped files; merge-on-read
+writes only the batch rows and tombstones their keys).
+
 With Delta on the classpath the same API maps 1:1 onto ``MERGE INTO``
 / ``DELETE FROM`` — this class is the portability shim, not the
-design. At 100 TB you would partition the snapshot by a date/fiscal
-column and MERGE only touched partitions; ``partition_by`` wires that
-through.
+design.
 """
 
 from __future__ import annotations
@@ -30,7 +36,7 @@ import os
 import time
 from collections.abc import Sequence
 from functools import reduce
-from operator import and_, or_
+from operator import and_
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,6 +45,7 @@ from pyspark.sql import functions as F
 from bw_new_data_integration_spark.operators.merge import (
     dedupe_latest,
     delete_matching,
+    key_join,
     merge_upsert,
 )
 
@@ -528,6 +535,10 @@ class ParquetKeyedTable:
         self.change_feed = bool(change_feed)
         self.key_cols = list(key_cols)
         self.partition_by = list(partition_by)
+        # hive partition columns inside the key match null-safely in
+        # every keyed join: a partition value is a directory, and the
+        # default (null) partition is one directory like any other
+        self._dir_keys = [c for c in self.partition_by if c in self.key_cols]
         self.stats_cols = list(stats_cols)
         if cluster is None:
             # an EXISTING table's persisted layout wins over the
@@ -579,9 +590,9 @@ class ParquetKeyedTable:
         (None for new/pre-upgrade tables). A table's mode follows its
         last writer unless the constructor overrides it; flipping
         mor→cow is safe because the first cow mutation while tombstones
-        are live is FORCED onto the full-merge path (scoped merges are
-        bypassed — see ``_upsert_pinned``/``delete_keys``), and a full
-        rewrite folds the tombstones; cow→mor only changes FUTURE
+        are live is FORCED onto the full-merge path (scoping is
+        bypassed — see ``_apply``), and a full rewrite folds the
+        tombstones; cow→mor only changes FUTURE
         commits."""
         try:
             m = self.manifest()
@@ -1719,41 +1730,30 @@ class ParquetKeyedTable:
         pq.write_table(table, out)
         return out
 
-    def _link_untouched_partitions(self, old_v: int, new_v: int) -> None:
-        """Carry partitions absent from the new snapshot forward as hard
-        links to the previous snapshot's files — untouched data is never
-        rewritten (byte-identical, same inode), which is the file-level
-        copy-on-write a 100 TB merge needs: commit cost is proportional
-        to the partitions *touched*, not the table size. The set of
-        touched partitions is read back from what Spark actually wrote,
-        so partition-value path encoding never needs re-deriving."""
-        old_dir, new_dir = self._snapshot_dir(old_v), self._snapshot_dir(new_v)
-        for dirpath, _dirnames, filenames in os.walk(old_dir):
-            _dirnames[:] = [x for x in _dirnames if not x.startswith(("_", "."))]
-            rel = os.path.relpath(dirpath, old_dir)
-            if rel == ".":
-                continue  # root holds only _SUCCESS, no data files
-            if os.path.isdir(os.path.join(new_dir, rel)):
-                continue  # partition was rewritten by this merge
-            data = [f for f in filenames if not f.startswith(("_", "."))]
-            if not data:
-                continue
-            os.makedirs(os.path.join(new_dir, rel), exist_ok=True)
-            for f in data:
-                os.link(os.path.join(dirpath, f), os.path.join(new_dir, rel, f))
-
     # -- operations ----------------------------------------------------------
+
+    @contextlib.contextmanager
+    def _locked_write(self, *frames: DataFrame):
+        """The frame of every keyed mutation: caller frames pinned (see
+        ``_pin``) and released afterwards, a failed commit's txn marker
+        cleared (``_txn_guard``), the writer lock held. Yields the
+        pinned frames in order."""
+        with contextlib.ExitStack() as stack:
+            pinned = []
+            for df in frames:
+                df, release = self._pin(df)
+                stack.callback(release)
+                pinned.append(df)
+            stack.enter_context(self._txn_guard())
+            stack.enter_context(self._write_lock())
+            yield pinned
 
     def overwrite(self, df: DataFrame, source_rows: int | None = None) -> int:
         """``source_rows``: optional caller-known row count, used ONLY
         to size the write when the plan's bytes are unobservable
         (in-memory/checkpointed frames) — see ``_n_write_partitions``."""
-        df, release = self._pin(df)
-        try:
-            with self._txn_guard(), self._write_lock():
-                return self._commit(df, "overwrite", source_rows=source_rows)
-        finally:
-            release()
+        with self._locked_write(df) as (df,):
+            return self._commit(df, "overwrite", source_rows=source_rows)
 
     def upsert(
         self,
@@ -1776,144 +1776,70 @@ class ParquetKeyedTable:
         business keys and no ``order_by`` to arbitrate raises instead
         of silently keeping an arbitrary row.
 
-        When ``partition_by`` is a subset of the key columns and the
-        source's schema matches, the merge is **partition-scoped**:
-        only partitions present in the source are read, merged, and
-        rewritten; all other partitions are carried forward untouched
-        (hard links — byte-identical). A trailing-window incremental
-        sync therefore costs O(window), not O(history)."""
+        The first load writes the batch as version 0; every later
+        upsert is :meth:`_apply` with no deletes, so it is scoped like
+        every keyed commit: only the touched partitions (partition
+        columns inside the key) or the touched key ranges (range
+        layout) are read and rewritten, the rest carried forward as
+        hard links. A trailing-window incremental sync therefore costs
+        O(window), not O(history)."""
         # pin BEFORE any wrapping: the range write's sampling job and
-        # the scoped-merge probe must not re-execute a side-effectful
-        # source plan (an XMLA/OData fetch posts exactly once)
-        source, release = self._pin(source)
-        try:
-            with self._txn_guard():
-                return self._upsert_pinned(
-                    spark, source, order_by=order_by,
-                    evolve_schema=evolve_schema, strict=strict,
-                    source_rows=source_rows,
-                )
-        finally:
-            release()
-
-    def _upsert_pinned(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        order_by: Sequence[str] | None,
-        evolve_schema: bool,
-        strict: bool,
-        source_rows: int | None = None,
-    ) -> int:
-        if order_by:
-            source = dedupe_latest(source, self.key_cols, order_by, desc=True)
-        elif strict:
-            # In-plan uniqueness assertion: a per-key window count feeds
-            # ``assert_true``, which throws from inside the merge job the
-            # moment any executor sees a duplicated key.  No separate
-            # eager probe job — the strict contract costs one extra
-            # hash-partitioning on the key (which the merge join reuses),
-            # not a second pass over the source.
-            n = F.count(F.lit(1)).over(Window.partitionBy(*self.key_cols))
-            msg = F.concat(
-                F.lit(
-                    "strict upsert: source batch has duplicate business keys (e.g. "
-                ),
-                F.to_json(F.struct(*self.key_cols)),
-                F.lit(") and no order_by to arbitrate last-write-wins"),
-            )
-            # assert_true returns NULL when the predicate holds, so the
-            # filter is a no-op on valid batches; it references the
-            # window column, so it cannot be pushed below the count.
-            source = (
-                source.withColumn("__key_n", n)
-                .where(F.assert_true(F.col("__key_n") <= 1, msg).isNull())
-                .drop("__key_n")
-            )
-        plain_dedup = not order_by and not strict
-        if plain_dedup and not (self.cluster == "range"):
-            source = source.dropDuplicates(self.key_cols)
-        with self._write_lock():
+        # the scope probe must not re-execute a side-effectful source
+        # plan (an XMLA/OData fetch posts exactly once)
+        with self._locked_write(source) as (source,):
             try:
-                target = self.read(spark)
-                if target is None:
+                if order_by:
+                    source = dedupe_latest(source, self.key_cols, order_by, desc=True)
+                elif strict:
+                    # In-plan uniqueness assertion: a per-key window
+                    # count feeds ``assert_true``, which throws from
+                    # inside the merge job the moment any executor sees
+                    # a duplicated key. No separate eager probe job —
+                    # the strict contract costs one extra
+                    # hash-partitioning on the key (which the merge join
+                    # reuses), not a second pass over the source.
+                    n = F.count(F.lit(1)).over(Window.partitionBy(*self.key_cols))
+                    msg = F.concat(
+                        F.lit(
+                            "strict upsert: source batch has duplicate business keys (e.g. "
+                        ),
+                        F.to_json(F.struct(*self.key_cols)),
+                        F.lit(") and no order_by to arbitrate last-write-wins"),
+                    )
+                    # assert_true returns NULL when the predicate holds,
+                    # so the filter is a no-op on valid batches; it
+                    # references the window column, so it cannot be
+                    # pushed below the count.
+                    source = (
+                        source.withColumn("__key_n", n)
+                        .where(F.assert_true(F.col("__key_n") <= 1, msg).isNull())
+                        .drop("__key_n")
+                    )
+                plain_dedup = not order_by and not strict
+                if self.current_version() < 0:
                     if self.change_feed:
                         # initial load: the commit's own data files ARE
                         # the insert events — no write amplification
                         self._last_cdf = "all_insert"
                     if self.cluster == "range":
-                        # initial load: the range exchange doubles as the
-                        # dedup's clustering (RangePartitioning satisfies
-                        # the aggregate's ClusteredDistribution — no
-                        # second exchange), so the clustered layout costs
-                        # no extra shuffle over the old dropDuplicates
+                        # the range exchange doubles as the dedup's
+                        # clustering (RangePartitioning satisfies the
+                        # aggregate's ClusteredDistribution — no second
+                        # exchange), so the clustered layout costs no
+                        # extra shuffle over a plain dropDuplicates
                         src = self._clustered(source, source_rows=source_rows)
                         if plain_dedup:
                             src = src.dropDuplicates(self.key_cols)
                         return self._commit(src, "upsert", layout="pre_clustered")
+                    if plain_dedup:
+                        source = source.dropDuplicates(self.key_cols)
                     return self._commit(source, "upsert")
-                if plain_dedup and self.cluster == "range":
-                    # merge paths re-shuffle on the key anyway; dedupe
-                    # plainly and let the write re-cluster the union
+                if plain_dedup:
                     source = source.dropDuplicates(self.key_cols)
-                if (
-                    self.write_mode == "mor"
-                    and set(target.columns) <= set(source.columns)
-                    and (self.manifest() or {}).get("files")
-                ):
-                    # the manifest guard matters: a MoR commit carries the
-                    # previous snapshot forward BY ITS MANIFEST file list —
-                    # a pre-manifest table (no list) must take the full
-                    # merge below or its history would be silently dropped
-                    # merge-on-read: O(batch) commit, no table rewrite.
-                    # Narrower sources fall through to the full COW merge
-                    # below, which also FOLDS the accumulated tombstones
-                    # (a full rewrite clears them).
-                    #
-                    # evolve_schema is METADATA-ONLY here (Delta parity):
-                    # only the batch's files carry the new columns; the
-                    # linked history reads as null through _mor_read's
-                    # allowMissingColumns union — adding a column to a
-                    # 100 TB table costs O(batch), not a rewrite. K5.
-                    cols = list(target.columns)
-                    if evolve_schema:
-                        cols += [c for c in source.columns if c not in cols]
-                    return self._mor_upsert(
-                        spark, source, cols, source_rows=source_rows,
-                        evolving=len(cols) > len(target.columns),
-                    )
-                # A mor→cow flip with LIVE tombstones must take the full
-                # merge below (which reads the live view and folds the
-                # tombstones by rewriting): the scoped paths read touched
-                # files raw, link untouched files forward, and never link
-                # tombstones — their new manifest would carry an empty
-                # tombstone list and silently resurrect every dead row
-                # (ADVICE r11 #1).
-                live_tombs = bool((self.manifest() or {}).get("tombstones"))
-                if (
-                    not live_tombs
-                    and self.partition_by
-                    and set(self.partition_by) <= set(self.key_cols)
-                    and set(source.columns) == set(target.columns)
-                ):
-                    return self._partition_scoped_upsert(target, source)
-                if (
-                    not live_tombs
-                    and self.cluster == "range"
-                    and not evolve_schema
-                    and set(source.columns) == set(target.columns)
-                ):
-                    return self._range_scoped_upsert(spark, source)
-                merged = merge_upsert(
-                    target, source, self.key_cols, evolve_schema=evolve_schema
+                return self._apply(
+                    spark, source, None,
+                    evolve_schema=evolve_schema, source_rows=source_rows,
                 )
-                if self.change_feed and not evolve_schema:
-                    new_v = self._write_snapshot(merged)
-                    self._stage_change_files(
-                        self._merge_change_events(target, source), new_v
-                    )
-                    return self._flip(new_v, "upsert")
-                return self._commit(merged, "upsert")
             except Exception as e:  # surface the in-plan assertion as the API error
                 if strict and self._is_strict_assert_failure(e):
                     # the assertion fired inside the write job; drop the
@@ -1929,6 +1855,38 @@ class ParquetKeyedTable:
                     start = detail.index("strict upsert")
                     raise ValueError(detail[start:].splitlines()[0]) from e
                 raise
+
+    def delete_keys(self, spark: SparkSession, keys_df: DataFrame) -> int:
+        """Mass delete by key (K2): :meth:`_apply` with no upserts. A
+        delete on a table that does not exist yet is a no-op; a delete
+        that provably matches nothing still commits a version."""
+        with self._locked_write(keys_df) as (keys_df,):
+            return self._apply(spark, None, keys_df)
+
+    def apply_changes(
+        self,
+        spark: SparkSession,
+        source: DataFrame,
+        delete_keys_df: DataFrame,
+        source_rows: int | None = None,
+    ) -> int:
+        """ONE commit with the exact semantics of
+        ``delete_keys(delete_keys_df)`` followed by ``upsert(source)``
+        (a key in both sides ends up with the source row, same as the
+        sequential pair), on every layout. The matview refresh shape —
+        dead groups deleted, changed groups merged — shares one scope
+        probe and one rewrite of the touched files (guide §1.2: don't
+        do the same pass twice), and the caller's txn marker lands
+        atomically with BOTH effects: there is no delete→upsert crash
+        window. On a table that does not exist yet there is nothing to
+        delete, and this is the first-load :meth:`upsert`."""
+        if not self.exists():
+            return self.upsert(spark, source, source_rows=source_rows)
+        with self._locked_write(source, delete_keys_df) as (source, delete_keys_df):
+            return self._apply(
+                spark, source.dropDuplicates(self.key_cols), delete_keys_df,
+                source_rows=source_rows,
+            )
 
     @staticmethod
     def _is_strict_assert_failure(e: Exception) -> bool:
@@ -1954,143 +1912,233 @@ class ParquetKeyedTable:
             return False
         return "strict upsert" in str(e)
 
-    #: Above this many touched partitions a partition-scoped merge stops
-    #: paying: the collect() and the IN-list grow linearly, and a batch
-    #: touching thousands of partitions is a backfill, not an increment —
-    #: a full-table merge (one shuffle, no driver-side partition list)
-    #: is the better plan. Tested flat to 1,000 partitions.
-    MAX_SCOPED_PARTITIONS = 2_000
+    def _apply(
+        self,
+        spark: SparkSession,
+        upserts: DataFrame | None,
+        deletes: DataFrame | None,
+        evolve_schema: bool = False,
+        source_rows: int | None = None,
+    ) -> int:
+        """THE keyed commit behind :meth:`upsert`, :meth:`delete_keys`
+        and :meth:`apply_changes` (the caller holds the writer lock;
+        ``upserts`` is unique per key): delete the keys of ``deletes``,
+        then merge ``upserts`` — a key in both ends up with the upsert
+        row — as ONE new version. Two orthogonal steps:
 
-    def _partition_scoped_upsert(self, target: DataFrame, source: DataFrame) -> int:
-        # The partition columns are part of the key, so a key can never
-        # move between partitions — merging each touched partition in
-        # isolation is exactly equivalent to the full-table merge.
-        # The collect is capped: limit(N+1) bounds driver memory no
-        # matter how wide the batch is.
-        touched = (
-            source.select(*self.partition_by)
-            .distinct()
-            .limit(self.MAX_SCOPED_PARTITIONS + 1)
-            .collect()
-        )
-        if not touched:
-            return self.current_version()  # empty batch: no-op, no new version
-        if len(touched) > self.MAX_SCOPED_PARTITIONS:
-            # documented fallback: backfill-sized batch -> full merge
-            merged = merge_upsert(target, source, self.key_cols)
-            return self._commit(merged, "upsert")
-        # Literal predicate (not a join) so Catalyst statically prunes
-        # the target scan to the touched partition directories. A single
-        # struct-IN (optimized to InSet past 10 values) keeps predicate
-        # size and evaluation O(1) per partition, unlike an OR-of-ANDs
-        # chain whose expression tree grows with the partition count.
-        # Tuples containing NULL partition values cannot ride IN (null-
-        # propagating equality) and get a null-safe OR-chain; they are
-        # bounded by the number of partition columns' null combinations.
-        cols = [F.col(c) for c in self.partition_by]
-        non_null = [r for r in touched if all(r[c] is not None for c in self.partition_by)]
-        with_null = [r for r in touched if any(r[c] is None for c in self.partition_by)]
-        preds = []
-        if non_null:
-            if len(self.partition_by) == 1:
-                c = self.partition_by[0]
-                preds.append(F.col(c).isin([r[c] for r in non_null]))
-            else:
-                lits = [
-                    F.struct(*(F.lit(r[c]).alias(c) for c in self.partition_by))
-                    for r in non_null
-                ]
-                preds.append(F.struct(*cols).isin(*lits))
-        for r in with_null:
-            preds.append(
-                reduce(and_, (F.col(c).eqNullSafe(F.lit(r[c])) for c in self.partition_by))
-            )
-        pred = reduce(or_, preds)
+        - **scope** (:meth:`_scope`): which data files the change can
+          touch — all of them, the touched partitions, or the files
+          whose key range holds a touched key;
+        - **layout**: copy-on-write deletes and merges over the scoped
+          files, writes them as one snapshot and hard-links the rest;
+          merge-on-read (VERDICT r10 #2) writes only the batch rows,
+          tombstones the union of both key sets and links every data
+          file and tombstone forward — O(batch), the table is never
+          read except for change events.
+
+        Both layouts derive change events the same way: delete events
+        over the scope, plus merge events over the scope minus the
+        deletes. A commit that changes the schema stays CDF-untracked:
+        events staged against the old schema would drop the new
+        columns, so consumers take the exact snapshot-diff fallback.
+
+        Scoping a copy-on-write commit needs the manifest file list
+        (links come from it), a source with the table's column set and
+        no live tombstones: a mor→cow flip must fold them with a full
+        rewrite, or the new manifest would drop the tombstone list and
+        resurrect every dead row (ADVICE r11 #1). Version rules: a
+        keyed commit whose batch is empty and whose deletes touch no
+        file commits nothing; a delete that touches no file still
+        commits a version (DELETE always advances history —
+        CDF/time-travel consumers count on it)."""
+        target = self.read(spark)
+        if target is None:
+            return self.current_version()
         old_v = self.current_version()
-        scoped = target.where(pred)
-        merged = merge_upsert(scoped, source, self.key_cols)
-        new_v = self._write_snapshot(merged)
-        if self.change_feed:
-            self._stage_change_files(self._merge_change_events(scoped, source), new_v)
-        self._link_untouched_partitions(old_v, new_v)
-        return self._flip(new_v, "partition_upsert")
+        m = self.manifest(old_v) or {}
+        files = m.get("files") or []
+        cols = list(target.columns)
+        evolving = False
+        if upserts is not None and evolve_schema:
+            cols += [c for c in upserts.columns if c not in cols]
+            evolving = set(upserts.columns) != set(target.columns)
+        track = self.change_feed and not evolving
+        keys = [df.select(*self.key_cols) for df in (upserts, deletes) if df is not None]
+        probe = reduce(DataFrame.unionByName, keys)
+        mor = (
+            self.write_mode == "mor"
+            and bool(files)
+            and (upserts is None or set(target.columns) <= set(upserts.columns))
+        )
+        if mor:
+            # evolve_schema is METADATA-ONLY here (Delta parity): only
+            # the batch's files carry the new columns; the linked
+            # history reads as null through _mor_read's
+            # allowMissingColumns union — adding a column to a 100 TB
+            # table costs O(batch), not a rewrite (K5)
+            new_v = old_v + 1
+            if upserts is None:
+                self._fresh_version_dir(new_v)
+                self._last_rows_written = 0
+            else:
+                upserts = upserts.select(*cols)
+                if self.partition_by:
+                    # without an exchange the file count is (source tasks
+                    # × touched partitions); hashing on the partition
+                    # columns writes one file per touched partition, the
+                    # right grain for a churn-sized batch
+                    n = self._n_write_partitions(
+                        upserts, base_bytes=0, source_rows=source_rows
+                    )
+                    upserts = upserts.repartition(n, *[F.col(c) for c in self.partition_by])
+                new_v = self._write_snapshot(upserts, base_bytes=0, source_rows=source_rows)
+            if track:
+                # read-only scope: the files a copy-on-write commit
+                # would have rewritten, live rows only (tombstones apply
+                # in full), for exact preimages
+                _, entries = self._scope(m, probe)
+                if entries is None:
+                    scope = target
+                elif entries:
+                    scope = self._mor_read(spark, old_v, m=m, data_entries=entries)
+                else:
+                    scope = target.limit(0)
+                self._stage_change_files(self._change_events(scope, upserts, deletes), new_v)
+            self._link_files(old_v, new_v, [f["path"] for f in files])
+            self._link_tombstones(old_v, new_v)
+            self._write_tombstone_set(probe, new_v)
+            if upserts is not None and deletes is not None:
+                return self._flip(new_v, "apply_changes")
+            return self._flip(new_v, "mor_upsert" if deletes is None else "mor_delete")
+        scopable = not m.get("tombstones") and (
+            upserts is None or set(upserts.columns) == set(target.columns)
+        )
+        kind, entries = self._scope(m, probe) if scopable else ("all", None)
+        if entries == []:
+            # no existing row can match: the deletes are no-ops and the
+            # batch is pure insert — nothing is read or rewritten
+            new_v = old_v + 1
+            if upserts is None:
+                self._fresh_version_dir(new_v)
+                self._last_rows_written = 0
+                if self.change_feed:
+                    self._last_cdf = "none"
+            else:
+                if upserts.isEmpty():
+                    return old_v
+                if self.change_feed:
+                    self._last_cdf = "all_insert"
+                new_v = self._write_snapshot(upserts.select(*cols), base_bytes=0)
+        else:
+            scope = target
+            if entries is not None:
+                scope = self._read_subset(spark, old_v, [e["path"] for e in entries])
+            out = scope
+            if deletes is not None:
+                out = delete_matching(out, deletes, self.key_cols, self._dir_keys)
+            if upserts is not None:
+                out = merge_upsert(
+                    out, upserts, self.key_cols, evolving, self._dir_keys
+                )
+            # size the rewrite by the bytes actually rewritten (scoped
+            # files + batch), not the whole table — a small batch
+            # against a huge table must not fan out to the cap
+            new_v = self._write_snapshot(
+                out,
+                base_bytes=None if entries is None else sum(e["bytes"] for e in entries),
+            )
+            if track:
+                self._stage_change_files(self._change_events(scope, upserts, deletes), new_v)
+        if entries is not None:
+            scoped = {e["path"] for e in entries}
+            self._link_files(old_v, new_v, [f["path"] for f in files if f["path"] not in scoped])
+        if upserts is not None and deletes is not None:
+            op = "apply_changes"
+        elif upserts is not None:
+            op = "upsert" if kind == "all" else f"{kind}_upsert"
+        else:
+            op = "range_delete" if kind == "range" else "delete"
+        return self._flip(new_v, op)
 
     #: Below this many data files a range-scoped merge can't beat the
     #: full merge (the probe pass over the source costs more than the
     #: handful of file rewrites it would save).
     MIN_SCOPED_FILES = 4
+    #: Above this many touched partitions a partition-scoped merge stops
+    #: paying: the collect grows linearly, and a batch touching
+    #: thousands of partitions is a backfill, not an increment — a
+    #: full-table merge (one shuffle, no driver-side partition list) is
+    #: the better plan. Tested flat to 1,000 partitions.
+    MAX_SCOPED_PARTITIONS = 2_000
 
-    def _range_scoped_upsert(self, spark: SparkSession, source: DataFrame) -> int:
-        """Key-range-scoped MERGE over a range-clustered table (VERDICT
-        r7 #2): the key-layout analogue of the partition-scoped merge.
+    def _scope(self, m: dict, probe: DataFrame) -> tuple[str, list[dict] | None]:
+        """The data files a keyed commit over ``probe``'s keys must
+        read, as ``(kind, manifest entries in manifest order)``:
 
-        Each data file of a range table covers a key interval recorded
-        in the manifest (parquet footer min/max of the key — true
-        bounds, kept only when exact; see ``_stat_tag``). A file whose
-        interval contains NO source key cannot match any source row, so
-        carrying it forward unchanged (hard link) is exactly equivalent
-        to running it through the anti-join — the same argument as the
-        partition-scoped path, with footer ranges instead of directory
-        values. Only intersecting files are read, merged, and
-        rewritten; commit cost is O(touched + batch), not O(history).
+        - ``("range", ...)`` on the range layout (VERDICT r7 #2): the
+          files whose key interval holds a probe key. A file whose
+          interval holds none cannot match any source or delete key,
+          so carrying it forward (hard link) is exactly equivalent to
+          running it through the anti-join. Multi-column keys test the
+          file's LEXICOGRAPHIC key-tuple interval (manifest ``kb`` —
+          VERDICT r8 #3), so composite-key files sharing one leading
+          value are discriminated by the minor columns; files without
+          ``kb`` fall back to the first key column's footer interval
+          (coarser, never incorrect), files with no bounds are always
+          in scope (``_ranged_files``). The probe is exact for any
+          interval structure (``_probe_touched_ranges``).
+        - ``("partition", ...)`` when the partition columns are part of
+          the key (a key can never move between partitions): the files
+          of the partitions the probe names. Values are matched as
+          Spark writes them into the directory name — cast to string,
+          null and '' as the hive default partition — so the match is
+          exact, nulls included.
+        - ``("all", None)``: every file — pre-manifest tables (links
+          come from the manifest list), range layouts below
+          ``MIN_SCOPED_FILES``, batches past ``MAX_SCOPED_PARTITIONS``
+          and unclustered tables.
 
-        Multi-column keys scope on the file's LEXICOGRAPHIC key-tuple
-        interval (manifest ``kb``: first/last row of the key-sorted
-        file — VERDICT r8 #3), so composite-key files sharing one
-        leading value are discriminated by the minor columns. Files
-        written before kb existed (or by preserve-layout compacts) fall
-        back to the first key column's footer interval — a sufficient
-        condition (the leading column is the major sort term), coarser
-        but never incorrect.
-
-        The touched set is computed distributed and EXACTLY — per
-        Arrow batch, the source keys are sorted once and each file
-        interval is tested with two binary searches (O(F log B) per
-        batch, so overlapping intervals from historic commits are
-        handled, not assumed away); the driver receives at most one row
-        per (partition, file) before the distinct. Files without usable
-        key bounds (pre-stats versions, >1 KiB string keys) are
-        conservatively always merged."""
-        m = self.manifest()
-        files = (m or {}).get("files", [])
-        if len(files) < self.MIN_SCOPED_FILES:
-            target = self.read(spark)
-            merged = merge_upsert(target, source, self.key_cols)
-            if self.change_feed:
-                new_v = self._write_snapshot(merged)
-                self._stage_change_files(
-                    self._merge_change_events(target, source), new_v
-                )
-                return self._flip(new_v, "upsert")
-            return self._commit(merged, "upsert")
-        ranged, always = self._ranged_files(files)
-        touched_idx = self._probe_touched_ranges(source, self.key_cols, ranged)
-        touched = [ranged[i][3] for i in sorted(touched_idx)] + always
-        old_v = self.current_version()
-        snap = self._snapshot_dir(old_v)
-        tgt = None
-        if not touched:
-            # pure insert batch (keys outside every file's range)
-            if source.isEmpty():
-                return old_v
-            merged = source
-            if self.change_feed:
-                self._last_cdf = "all_insert"
-        else:
-            tgt = spark.read.option("basePath", snap).parquet(
-                *(os.path.join(snap, p) for p in touched)
+        An empty entry list means no existing row can match."""
+        files = m.get("files") or []
+        if self.cluster == "range" and len(files) >= self.MIN_SCOPED_FILES:
+            ranged, always = self._ranged_files(files)
+            hit = {ranged[i][3] for i in self._probe_touched_ranges(probe, self.key_cols, ranged)}
+            hit.update(always)
+            return "range", [f for f in files if f["path"] in hit]
+        if files and self.partition_by and set(self.partition_by) <= set(self.key_cols):
+            # the collect is capped: limit(N+1) bounds driver memory no
+            # matter how wide the batch is
+            vals = (
+                probe.select(*[F.col(c).cast("string") for c in self.partition_by])
+                .distinct()
+                .limit(self.MAX_SCOPED_PARTITIONS + 1)
+                .collect()
             )
-            merged = merge_upsert(tgt, source, self.key_cols)
-        # size the rewrite by the bytes actually rewritten (touched
-        # files + batch), not the whole table — a small batch against a
-        # huge table must not fan the merged frame out to the cap
-        touched_set = set(touched)
-        touched_bytes = sum(f["bytes"] for f in files if f["path"] in touched_set)
-        new_v = self._write_snapshot(merged, base_bytes=touched_bytes)
-        if self.change_feed and tgt is not None:
-            self._stage_change_files(self._merge_change_events(tgt, source), new_v)
-        self._link_files(old_v, new_v, {f["path"] for f in files} - touched_set)
-        return self._flip(new_v, "range_upsert")
+            if len(vals) <= self.MAX_SCOPED_PARTITIONS:
+                touched = {tuple(v or None for v in r) for r in vals}
+                return "partition", [
+                    f
+                    for f in files
+                    if tuple(_rel_partition_values(f["path"]).get(c) for c in self.partition_by)
+                    in touched
+                ]
+        return "all", None
+
+    def _change_events(
+        self, scope: DataFrame, upserts: DataFrame | None, deletes: DataFrame | None
+    ) -> DataFrame:
+        """A keyed commit's change events over the rows it can touch:
+        ``delete`` events for the keys of ``deletes``, then the merge
+        events of ``upserts`` against the scope minus those deletes —
+        the same events the sequential delete-then-upsert pair
+        stages."""
+        events = []
+        if deletes is not None:
+            events.append(self._delete_change_events(scope, deletes))
+            scope = delete_matching(scope, deletes, self.key_cols, self._dir_keys)
+        if upserts is not None:
+            events.append(self._merge_change_events(scope, upserts))
+        return reduce(DataFrame.unionByName, events)
 
     def _ranged_files(self, files: Sequence[dict]) -> tuple[list[tuple], list[str]]:
         """Split manifest files into probe-able intervals and
@@ -2507,7 +2555,7 @@ class ParquetKeyedTable:
         if self._tombstones_broadcastable(tomb_entries):
             tomb = F.broadcast(tomb)
         return (
-            data.join(tomb, self.key_cols, "left")
+            key_join(data, tomb, self.key_cols, "left", self._dir_keys)
             .where(F.col("__tv").isNull() | (F.col("__tv") <= F.col("__wv")))
             .select(*out_cols)
         )
@@ -2565,314 +2613,13 @@ class ParquetKeyedTable:
                 self._last_cdf = "none"  # same live rows: zero change events
             return self._flip(new_v, "compact_tombstones")
 
-    def _mor_upsert(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        target_cols: Sequence[str],
-        source_rows: int | None = None,
-        evolving: bool = False,
-    ) -> int:
-        """Merge-on-read keyed upsert: O(batch) write cost regardless of
-        how the batch's keys interleave the table. The commit writes
-        ONLY the batch rows (range-clustered among themselves), links
-        every previous data file and tombstone forward, and tombstones
-        the batch's keys — old versions of those keys die by precedence
-        at read time instead of by rewrite at write time. With
-        ``change_feed`` the commit additionally reads the key-range-
-        intersecting files (read-only — the probe scope a COW merge
-        would have REWRITTEN) to derive exact four-type events."""
-        old_v = self.current_version()
-        src = source.select(*target_cols)
-        if self.partition_by:
-            # partitioned batch write: without an exchange the file
-            # count is (source tasks × touched partitions) — a drip of
-            # tiny files every commit. Hashing on the partition columns
-            # puts each partition value on exactly one task (one file
-            # per touched partition), with the task count sized from
-            # the batch bytes like every other write. MoR batches are
-            # churn-sized by definition, so one file per partition per
-            # commit is the right grain; compaction re-tightens layout.
-            n = self._n_write_partitions(src, base_bytes=0, source_rows=source_rows)
-            src = src.repartition(n, *[F.col(c) for c in self.partition_by])
-        new_v = self._write_snapshot(src, base_bytes=0, source_rows=source_rows)
-        m = self.manifest(old_v) or {}
-        files = m.get("files") or []
-        if self.change_feed and not evolving:
-            # schema-evolving commits stay CDF-UNTRACKED (same rule as
-            # the COW path): events staged against the old schema would
-            # silently drop the new columns from postimages, so the
-            # consumer's exact snapshot-diff fallback serves instead
-            visible = self._mor_visible_scope(spark, old_v, m, src)
-            self._stage_change_files(self._merge_change_events(visible, src), new_v)
-        self._link_files(old_v, new_v, [f["path"] for f in files])
-        self._link_tombstones(old_v, new_v)
-        self._write_tombstone_set(src, new_v)
-        return self._flip(new_v, "mor_upsert")
-
-    def _mor_visible_scope(
-        self, spark: SparkSession, version: int, m: dict, probe_df: DataFrame
-    ) -> DataFrame:
-        """LIVE rows of version ``version`` restricted to the data files
-        whose key ranges — or, on a partitioned table, whose partition
-        paths — intersect ``probe_df``'s keys (the probe scope a COW
-        merge would have rewritten — here read-only, for CDF
-        preimages). Tombstones apply in full for exact visibility."""
-        files = m.get("files") or []
-        entries = files
-        ranged, always = self._ranged_files(files)
-        if ranged and len(files) >= self.MIN_SCOPED_FILES:
-            touched_idx = self._probe_touched_ranges(probe_df, self.key_cols, ranged)
-            by_path = {f["path"]: f for f in files}
-            touched = [ranged[i][3] for i in sorted(touched_idx)] + always
-            entries = [by_path[p] for p in touched]
-        elif (
-            self.partition_by
-            and set(self.partition_by) <= set(self.key_cols)
-            and set(self.partition_by) <= set(probe_df.columns)
-            and len(files) >= self.MIN_SCOPED_FILES
-        ):
-            # partitioned MoR: the preimage scan only needs partitions
-            # the batch touches — SOUND ONLY when the partition columns
-            # are part of the key (then a key can never move between
-            # partitions). Otherwise a partition-moving update's OLD row
-            # lives in a directory the batch doesn't name, and pruning
-            # would turn its update_preimage into a phantom insert —
-            # caught by the matview-over-partitioned-MoR composition
-            # test. Per-column IN predicates over the batch's distinct
-            # partition values give a conservative superset (the cross
-            # of the columns) matched against each file's hive path —
-            # capped like the partition-scoped merge.
-            vals = (
-                probe_df.select(*self.partition_by)
-                .distinct()
-                .limit(self.MAX_SCOPED_PARTITIONS + 1)
-                .collect()
-            )
-            has_null = any(
-                r[c] is None for r in vals for c in self.partition_by
-            )
-            # partition matching is null-rejecting, so a batch touching
-            # the hive default (null) partition must keep the full scan
-            if 0 < len(vals) <= self.MAX_SCOPED_PARTITIONS and not has_null:
-                preds = [
-                    (c, "in", [r[c] for r in vals]) for c in self.partition_by
-                ]
-                entries = [e for e in files if _file_may_match(e, preds)]
-        if not entries:
-            return self.read(spark, version).limit(0)
-        return self._mor_read(spark, version, m=m, data_entries=entries)
-
-    def _mor_delete(self, spark: SparkSession, keys_df: DataFrame) -> int:
-        """Merge-on-read mass delete: a tombstone-only commit — every
-        data file links forward, the delete keys land as tombstones.
-        O(batch) always; the matched rows stop being visible at the
-        precedence join."""
-        old_v = self.current_version()
-        m = self.manifest(old_v) or {}
-        files = m.get("files") or []
-        new_v = old_v + 1
-        self._fresh_version_dir(new_v)
-        if self.change_feed:
-            visible = self._mor_visible_scope(spark, old_v, m, keys_df)
-            self._stage_change_files(
-                self._delete_change_events(visible, keys_df), new_v
-            )
-        self._link_files(old_v, new_v, [f["path"] for f in files])
-        self._link_tombstones(old_v, new_v)
-        self._write_tombstone_set(keys_df, new_v)
-        self._last_rows_written = 0
-        return self._flip(new_v, "mor_delete")
-
-    def delete_keys(self, spark: SparkSession, keys_df: DataFrame) -> int:
-        keys_df, release = self._pin(keys_df)
-        try:
-            with self._txn_guard(), self._write_lock():
-                target = self.read(spark)
-                if target is None:
-                    return self.current_version()
-                if self.write_mode == "mor" and (self.manifest() or {}).get("files"):
-                    return self._mor_delete(spark, keys_df)
-                # same mor→cow-flip guard as _upsert_pinned: a range-
-                # scoped delete while tombstones are live would drop the
-                # tombstone list from the new manifest and resurrect
-                # dead rows — force the full rewrite, which folds them
-                if self.cluster == "range" and not (
-                    (self.manifest() or {}).get("tombstones")
-                ):
-                    return self._range_scoped_delete(spark, keys_df)
-                remaining = delete_matching(target, keys_df, self.key_cols)
-                if self.change_feed:
-                    new_v = self._write_snapshot(remaining)
-                    self._stage_change_files(
-                        self._delete_change_events(target, keys_df), new_v
-                    )
-                    return self._flip(new_v, "delete")
-                return self._commit(remaining, "delete")
-        finally:
-            release()
-
-    def apply_changes(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        delete_keys_df: DataFrame,
-        source_rows: int | None = None,
-    ) -> int:
-        """ONE commit with the exact semantics of
-        ``delete_keys(delete_keys_df)`` followed by ``upsert(source)``
-        (a key in both sides ends up with the source row, same as the
-        sequential pair). The matview refresh shape — dead groups
-        deleted, changed groups merged — previously paid two commits,
-        each probing and REWRITING largely the same touched files;
-        here the key sets share one range probe and the union of
-        touched files is rewritten once (guide §1.2: don't do the same
-        pass twice). The single commit is also strictly better for
-        crash recovery: the caller's txn marker lands atomically with
-        BOTH effects instead of riding only the second commit.
-
-        Tables without a combined path (MoR, hive-partitioned, live
-        tombstones from a mor→cow flip, unclustered tables, empty
-        tables) fall back to the sequential pair with today's ordering
-        and marker placement. Sub-``MIN_SCOPED_FILES`` layouts take the
-        combined path WITHOUT the range probe (touched = every file):
-        the sequential pair rewrites the whole table twice there, so
-        one full rewrite is still strictly half the work.
-        """
-        m = self.manifest() if self.exists() else None
-        files = (m or {}).get("files") or []
-        combined = (
-            self.write_mode != "mor"
-            and not self.partition_by
-            and self.cluster == "range"
-            and not (m or {}).get("tombstones")
-            and bool(files)
-        )
-        if not combined:
-            # sequential fallback, preserving the caller's marker
-            # placement: the idempotent delete first WITHOUT the txn
-            # marker, then the upsert consumes it (the order the
-            # matview refresh always used)
-            pending = self.__dict__.pop("_pending_txn", None)
-            self.delete_keys(spark, delete_keys_df)
-            if pending is not None:
-                self._pending_txn = pending
-            return self.upsert(spark, source, source_rows=source_rows)
-        source, release_s = self._pin(source)
-        delete_keys_df, release_k = self._pin(delete_keys_df)
-        try:
-            with self._txn_guard(), self._write_lock():
-                # merge paths re-shuffle on the key anyway; dedupe the
-                # source plainly (same discipline as _upsert_pinned)
-                source = source.dropDuplicates(self.key_cols)
-                if set(source.columns) != set(self.read(spark).columns):
-                    raise ValueError(
-                        "apply_changes: source schema must match the table "
-                        "(no evolution on the combined path)"
-                    )
-                if len(files) < self.MIN_SCOPED_FILES:
-                    # tiny layout: the probe costs more than it saves
-                    # (same threshold as the scoped merge); rewrite all
-                    touched = [f["path"] for f in files]
-                else:
-                    ranged, always = self._ranged_files(files)
-                    probe_src = source.select(*self.key_cols).unionByName(
-                        delete_keys_df.select(*self.key_cols)
-                    )
-                    touched_idx = self._probe_touched_ranges(
-                        probe_src, self.key_cols, ranged
-                    )
-                    touched = [ranged[i][3] for i in sorted(touched_idx)] + always
-                old_v = self.current_version()
-                snap = self._snapshot_dir(old_v)
-                tgt = None
-                if not touched:
-                    # neither key set intersects any file: the deletes
-                    # match nothing and the batch is pure insert
-                    if source.isEmpty():
-                        return old_v
-                    merged = source
-                    if self.change_feed:
-                        self._last_cdf = "all_insert"
-                else:
-                    tgt = spark.read.option("basePath", snap).parquet(
-                        *(os.path.join(snap, p) for p in touched)
-                    )
-                    after_del = delete_matching(tgt, delete_keys_df, self.key_cols)
-                    merged = merge_upsert(after_del, source, self.key_cols)
-                touched_set = set(touched)
-                touched_bytes = sum(
-                    f["bytes"] for f in files if f["path"] in touched_set
-                )
-                new_v = self._write_snapshot(merged, base_bytes=touched_bytes)
-                if self.change_feed and tgt is not None:
-                    after_del = delete_matching(tgt, delete_keys_df, self.key_cols)
-                    events = self._delete_change_events(
-                        tgt, delete_keys_df
-                    ).unionByName(self._merge_change_events(after_del, source))
-                    self._stage_change_files(events, new_v)
-                self._link_files(
-                    old_v, new_v, {f["path"] for f in files} - touched_set
-                )
-                return self._flip(new_v, "apply_changes")
-        finally:
-            release_k()
-            release_s()
-
-    def _range_scoped_delete(self, spark: SparkSession, keys_df: DataFrame) -> int:
-        """Range-scoped mass delete: a file whose key interval contains
-        no delete key keeps every row under the anti-join, so only
-        intersecting files are read and rewritten — same scoping
-        argument (and same exact interval probe) as the range-scoped
-        merge. A delete that touches nothing is a no-op (no new
-        version)."""
-        m = self.manifest()
-        files = (m or {}).get("files", [])
-        if len(files) < self.MIN_SCOPED_FILES:
-            target = self.read(spark)
-            remaining = delete_matching(target, keys_df, self.key_cols)
-            if self.change_feed:
-                new_v = self._write_snapshot(remaining)
-                self._stage_change_files(
-                    self._delete_change_events(target, keys_df), new_v
-                )
-                return self._flip(new_v, "delete")
-            return self._commit(remaining, "delete")
-        ranged, always = self._ranged_files(files)
-        touched_idx = self._probe_touched_ranges(keys_df, self.key_cols, ranged)
-        touched = [ranged[i][3] for i in sorted(touched_idx)] + always
-        old_v = self.current_version()
-        if not touched:
-            # provably-no-match delete still commits a version (DELETE
-            # always advances history — CDF/time-travel consumers count
-            # on it) but rewrites nothing: every file links forward
-            new_v = old_v + 1
-            self._fresh_version_dir(new_v)
-            self._link_files(old_v, new_v, [f["path"] for f in files])
-            self._last_rows_written = 0
-            if self.change_feed:
-                self._last_cdf = "none"
-            return self._flip(new_v, "range_delete")
-        snap = self._snapshot_dir(old_v)
-        tgt = spark.read.option("basePath", snap).parquet(
-            *(os.path.join(snap, p) for p in touched)
-        )
-        remaining = delete_matching(tgt, keys_df, self.key_cols)
-        touched_set = set(touched)
-        touched_bytes = sum(f["bytes"] for f in files if f["path"] in touched_set)
-        new_v = self._write_snapshot(remaining, base_bytes=touched_bytes)
-        if self.change_feed:
-            self._stage_change_files(self._delete_change_events(tgt, keys_df), new_v)
-        self._link_files(old_v, new_v, {f["path"] for f in files} - touched_set)
-        return self._flip(new_v, "range_delete")
-
     def _changed_file_sets(
         self, from_version: int, to_version: int
     ) -> tuple[list[str], list[str]]:
         """Rel paths that DIFFER between two snapshots. A file present
         in both snapshot directories at the same rel path with the same
-        inode is a hard-link carry-forward (see ``_link_files`` /
-        ``_link_untouched_partitions``) — bit-identical, so no row in
+        inode is a hard-link carry-forward (see ``_link_files``) —
+        bit-identical, so no row in
         it can appear in the diff: scoped commits never touch a key
         whose file they carry forward, so a shared file holds the same
         rows on both sides. Everything else (dropped, added, rewritten)
@@ -2900,14 +2647,18 @@ class ParquetKeyedTable:
     ) -> DataFrame:
         """Read only the given data files of a snapshot (``basePath``
         keeps hive partition columns intact); empty list → a metadata-
-        only empty frame with the snapshot's schema."""
+        only empty frame with the snapshot's schema. Hive partition
+        columns take the snapshot's types: inferred from a subset's
+        paths alone, ``d=01`` would read as the integer 1 when the
+        table's other partitions make ``d`` a string."""
         full = self.read(spark, version)
         if not rel_paths:
             return full.limit(0)
         snap = self._snapshot_dir(version)
-        df = spark.read.option("basePath", snap).parquet(
-            *(os.path.join(snap, r) for r in rel_paths)
-        )
+        reader = spark.read.option("basePath", snap)
+        if self.partition_by:
+            reader = reader.schema(full.schema)
+        df = reader.parquet(*(os.path.join(snap, r) for r in rel_paths))
         return df.select(*full.columns)
 
     def changes(
@@ -3021,7 +2772,7 @@ class ParquetKeyedTable:
         nonkey = [c for c in target.columns if c not in self.key_cols]
         st = target.select(*self.key_cols, F.struct(*nonkey).alias("__t"))
         ss = source.select(*self.key_cols, F.struct(*nonkey).alias("__s"))
-        j = ss.join(st, self.key_cols, "left")
+        j = key_join(ss, st, self.key_cols, "left", self._dir_keys)
         s_cols = [F.col(f"__s.{c}").alias(c) for c in nonkey]
         t_cols = [F.col(f"__t.{c}").alias(c) for c in nonkey]
         ins = j.where(F.col("__t").isNull()).select(
@@ -3043,8 +2794,9 @@ class ParquetKeyedTable:
     def _delete_change_events(self, target: DataFrame, keys_df: DataFrame) -> DataFrame:
         """``delete`` events: the full preimage of every target row a
         key-delete removes."""
-        matched = target.join(
-            keys_df.select(*self.key_cols), self.key_cols, "left_semi"
+        matched = key_join(
+            target, keys_df.select(*self.key_cols), self.key_cols, "left_semi",
+            self._dir_keys,
         )
         return matched.withColumn("_change_type", F.lit("delete"))
 

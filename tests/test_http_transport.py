@@ -165,6 +165,28 @@ def test_encode_odata_batch_golden():
     assert text.endswith("--cs1--\r\n--b1--\r\n")
 
 
+def test_encode_odata_batch_delete_golden():
+    body, ctype = ht.encode_odata_batch(
+        "daily_sales",
+        [{"business_key": "O'Hare"}],
+        "business_key",
+        batch_id="b1",
+        changeset_id="cs1",
+        method="DELETE",
+    )
+    assert ctype == "multipart/mixed; boundary=b1"
+    # one bodiless DELETE part by alternate key, quotes doubled (C9)
+    assert body == (
+        b"--b1\r\nContent-Type: multipart/mixed;boundary=cs1\r\n\r\n"
+        b"--cs1\r\nContent-Type: application/http\r\n"
+        b"Content-Transfer-Encoding: binary\r\nContent-ID: 1\r\n\r\n"
+        b"DELETE daily_sales(business_key='O''Hare') HTTP/1.1\r\n\r\n"
+        b"--cs1--\r\n--b1--\r\n"
+    )
+    with pytest.raises(ValueError, match="PATCH or DELETE"):
+        ht.encode_odata_batch("t", [{"k": "a"}], "k", method="PUT")
+
+
 def test_parse_batch_statuses_exact_and_conservative():
     text = _batch_response([201, 204, 400]).decode()
     assert ht.parse_batch_statuses(text, 3) == [201, 204, 400]

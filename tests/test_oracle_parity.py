@@ -56,3 +56,36 @@ def test_query_matches_oracle(name, spark, duck_small):
         return
     duck_pdf = duck_small.sql(oracle).df()
     assert_frames_match(name, spark_pdf, duck_pdf)
+
+
+def test_o8_session_gap_boundary_matches_spark(spark, tmp_path):
+    """Spark's ``session_window`` continues a session across a gap of
+    exactly 30 minutes and splits it past that, at sub-second
+    precision; the o8 oracle must draw the same line (gaps of 1799.5 s,
+    1800 s and 1800.5 s)."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1)
+    gaps = {1: 1799.5, 2: 1800.0, 3: 1800.5}
+    events = [(u, t) for u, g in gaps.items() for t in (t0, t0 + dt.timedelta(seconds=g))]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": list(range(len(events))),
+                "user_id": [u for u, _ in events],
+                "ts": pa.array([t for _, t in events], pa.timestamp("us")),
+                "value": [1.0] * len(events),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    name = "o8_session_window_native"
+    spark_pdf = q.registry()[name](spark, str(tmp_path)).toPandas()
+    duck = duckdb.connect()
+    duck.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    assert_frames_match(name, spark_pdf, duck.sql(q.oracles()[name]).df())
+    assert spark_pdf.groupby("user_id").size().to_dict() == {1: 1, 2: 1, 3: 2}

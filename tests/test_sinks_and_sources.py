@@ -163,6 +163,36 @@ def test_write_batched_skips_keyless_and_prunes_nulls(spark, tmp_path):
     assert {"bk": "b"} in seen  # null v pruned from the record (P7)
 
 
+def test_delete_batched_sends_the_delete_verb(spark, tmp_path):
+    """``delete_batched`` calls ``transport(batch, method="DELETE")``:
+    a delete never reaches the sink as a key-only upsert. A 404 (key
+    already gone) counts as done; a transport without a ``method``
+    parameter fails the push instead of upserting the keys."""
+    keys = spark.createDataFrame([Row(bk="a"), Row(bk="b"), Row(bk="c")])
+    spool = str(tmp_path / "verbs.jsonl")
+
+    def factory():
+        def transport(batch, method="PATCH"):
+            with open(spool, "a") as fh:
+                for rec in batch:
+                    fh.write(json.dumps({**rec, "method": method}) + "\n")
+            return [404 if rec["bk"] == "c" else 204 for rec in batch]
+
+        return transport
+
+    stats = odata.delete_batched(keys, factory, "bk", concurrency=1)
+    assert stats["updated"] == 3 and stats["errors"] == 0
+    with open(spool) as fh:
+        seen = sorted((r["bk"], r["method"]) for r in map(json.loads, fh))
+    assert seen == [("a", "DELETE"), ("b", "DELETE"), ("c", "DELETE")]
+
+    def upsert_only():
+        return lambda batch: [204] * len(batch)
+
+    with pytest.raises(Exception, match="method"):
+        odata.delete_batched(keys, upsert_only, "bk", concurrency=1)
+
+
 def test_retry_policy_429_then_success():
     stats = odata.BatchStats()
     attempts = []
@@ -332,6 +362,52 @@ def test_pipeline_runner_upsert_roundtrip(spark, tmp_path):
     assert (
         target.read(spark).groupBy("business_key").count().filter("count > 1").count() == 0
     )
+
+
+def test_audit_column_agrees_between_table_and_change_feed(spark, tmp_path):
+    """``build_plan(audit_ts=True)`` stamps ONE instant per plan: a
+    change_feed upsert runs the plan twice (snapshot write, then
+    change-event staging), and the table and its change feed must
+    carry the same ``last_refreshed``."""
+    from bw_new_data_integration_spark import catalog
+    from bw_new_data_integration_spark.plans import pipeline as plans
+
+    from .conftest import SF_SMALL
+
+    specs = plans.load_pipelines(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "pipelines", "pipelines.yaml")
+    )
+    spec = specs["daily_sales"]
+    key = spec.mapping.alternate_key
+    src = catalog.load(spark, SF_SMALL, spec.source_table)
+    t = ParquetKeyedTable(str(tmp_path / "audit"), [key], change_feed=True)
+    t.upsert(spark, plans.build_plan(src, spec, audit_ts=True))
+    v0 = t.current_version()
+    t.upsert(spark, plans.build_plan(src, spec, audit_ts=True))
+    assert dict(t.read(spark).dtypes)["last_refreshed"] == "timestamp"
+    table = {r[key]: r["last_refreshed"] for r in t.read(spark).collect()}
+    post = {
+        r[key]: r["last_refreshed"]
+        for r in t.commit_changes(spark, v0)
+        .where(F.col("_change_type") == "update_postimage")
+        .collect()
+    }
+    assert len(set(table.values())) == 1  # one instant for the whole plan
+    assert post == table  # every row re-stamped, feed agrees with table
+
+
+def test_get_spark_keeps_a_running_sessions_conf(spark, monkeypatch):
+    """``get_spark()`` on a live session (``runner.main`` inside a test
+    or notebook) returns it without re-applying the engine's runtime
+    SQL conf: shuffle partitions stay what the session's owner set."""
+    from bw_new_data_integration_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    got = get_spark(app_name="pipeline_runner")
+    assert got.sparkContext is spark.sparkContext
+    assert before != "3" and spark.conf.get(key) == before
 
 
 def test_pipeline_slicer_prunes(spark):
@@ -1275,7 +1351,7 @@ def test_apply_changes_combined_commit_equals_sequential(spark, tmp_path):
     got = {r["business_key"]: r["v"] for r in t2.read(spark).collect()}
     assert "k0001" not in got and got["k0005"] == -5 and len(got) == 49
 
-    # MoR table: fallback (two commits), identical final rows
+    # MoR table: identical final rows
     t3 = ParquetKeyedTable(str(tmp_path / "ac_mor"), ["business_key"],
                            write_mode="mor")
     t3.upsert(spark, spark.createDataFrame(
@@ -1328,6 +1404,81 @@ def test_apply_changes_change_feed_replay(spark, tmp_path):
     got = dict(rows(t))
     assert "k01" not in got and got["k02"] == -2 and got["k05"] == -5
     assert got["zz"] == 99 and len(got) == 30  # 30 - 2 dead + k02 back + zz
+
+
+_LAYOUTS = {
+    "range_cow": {},
+    "unclustered": {"cluster": "none"},
+    "hive": {"partition_by": ["p"]},
+    "mor": {"write_mode": "mor"},
+    "hive_mor": {"partition_by": ["p"], "write_mode": "mor"},
+    "mor_to_cow": {"write_mode": "mor"},  # reopened as cow, tombstones live
+}
+
+
+@pytest.mark.parametrize("layout", list(_LAYOUTS))
+def test_apply_changes_is_one_commit_on_every_layout(spark, tmp_path, layout):
+    """``apply_changes(src, dead)`` is ONE commit on every layout: the
+    version advances by exactly 1, the caller's txn marker lands on
+    that version, the rows equal a ``delete_keys`` + ``upsert`` twin,
+    and the per-commit change feed nets to the same state change."""
+    kw = _LAYOUTS[layout]
+    keys = ["p", "k"] if "partition_by" in kw else ["k"]
+
+    def rows(ks, v):
+        return spark.createDataFrame(
+            [(k % 4, k, float(v(k))) for k in ks], "p int, k int, v double"
+        )
+
+    def mk(name):
+        t = ParquetKeyedTable(str(tmp_path / name), keys, change_feed=True, **kw)
+        t.upsert(spark, rows(range(200), lambda k: k))
+        t.compact(spark, target_file_bytes=1024)
+        if layout == "mor_to_cow":
+            t.upsert(spark, rows(range(0, 200, 9), lambda k: -k))  # tombstones
+            t = ParquetKeyedTable(
+                t.path, keys, change_feed=True, write_mode="cow"
+            )
+            assert t.manifest()["tombstones"]
+        return t
+
+    dead = rows([*range(40, 60), 999], lambda k: 0).select(*keys)
+    # 50..59 in BOTH sides (the upsert wins); 300/301 are new keys
+    src = rows([*range(50, 70), 300, 301], lambda k: 1000 + k)
+
+    def state(t):
+        return {tuple(r[c] for c in keys): r["v"] for r in t.read(spark).collect()}
+
+    t, twin = mk("t"), mk("twin")
+    v0 = t.current_version()
+    before = state(t)
+    if layout in ("range_cow", "hive"):  # enough files for the scope to show
+        assert t.manifest()["n_files"] >= ParquetKeyedTable.MIN_SCOPED_FILES
+    t.set_commit_txn({"app": "ac", "n": 1})
+    t.apply_changes(spark, src, dead)
+    assert t.current_version() == v0 + 1
+    assert t.manifest()["txn"] == {"app": "ac", "n": 1}
+    assert t.last_txn("ac") == {"app": "ac", "n": 1}
+    twin.delete_keys(spark, dead)
+    twin.upsert(spark, src)
+    assert state(t) == state(twin)
+    assert len(state(t)) == 200 - 20 + 10 + 2
+
+    def net(tbl):
+        # fold the per-commit feed over the starting state: within a
+        # commit, a key's delete precedes its re-insert
+        out = dict(before)
+        feed = tbl.commit_changes(spark, v0).collect()
+        late = ("insert", "update_postimage")
+        for r in sorted(feed, key=lambda r: (r["_commit_version"], r["_change_type"] in late)):
+            key = tuple(r[c] for c in keys)
+            if r["_change_type"] == "delete":
+                del out[key]
+            elif r["_change_type"] in ("insert", "update_postimage"):
+                out[key] = r["v"]
+        return out
+
+    assert net(t) == net(twin) == state(t)
 
 
 def test_range_scoped_delete_links_untouched_files(spark, tmp_path):
@@ -4472,15 +4623,16 @@ def test_maintain_rollup_mixed_tracked_untracked_window(spark, tmp_path):
 
 
 def _capture_transport(path):
-    """A sink transport that records every request's records to a JSONL
-    file (executor-side; local mode shares the FS) and succeeds."""
+    """A sink transport that records every request's records, each
+    with its verb under ``_method``, to a JSONL file (executor-side;
+    local mode shares the FS) and succeeds."""
     import json as _json
 
     def factory():
-        def transport(batch):
+        def transport(batch, method="PATCH"):
             with open(path, "a") as f:
                 for rec in batch:
-                    f.write(_json.dumps(rec, default=str) + "\n")
+                    f.write(_json.dumps({**rec, "_method": method}, default=str) + "\n")
             return [204] * len(batch)
 
         return transport
@@ -4518,8 +4670,8 @@ def test_sync_to_rest_pushes_only_changes(spark, tmp_path):
     assert st["action"] == "incremental"
     assert st["upserted"] == 7 and st["deleted"] == 3 and st["errors"] == 0
     pushed = [_json.loads(l) for l in open(log2)]
-    up_keys = {r["bk"] for r in pushed if "v" in r}
-    del_keys = {r["bk"] for r in pushed if "v" not in r}
+    up_keys = {r["bk"] for r in pushed if r["_method"] == "PATCH"}
+    del_keys = {r["bk"] for r in pushed if r["_method"] == "DELETE"}
     assert up_keys == {f"k{i}" for i in range(5)} | {"new1", "new2"}
     assert del_keys == {"k10", "k11", "k12"}
     # unchanged table: no-op, no pushes
@@ -4658,7 +4810,7 @@ def test_sync_rebootstrap_reconciles_deletes_with_sink_keys(spark, tmp_path):
     assert st["upserted"] == 6 and st["deleted"] == 2
     assert "deletes_unreconciled" not in st
     pushed = [_json.loads(l) for l in open(log)]
-    del_keys = {r["bk"] for r in pushed if "v" not in r}
+    del_keys = {r["bk"] for r in pushed if r["_method"] == "DELETE"}
     assert del_keys == {"k2", "k5"}
 
 
